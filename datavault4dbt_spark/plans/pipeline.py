@@ -13,9 +13,16 @@ from each entity's declared dependencies; each run() pass:
    append records_to_insert (insert-only),
 4. views (sat_v1 & co.) are re-registered, never materialized.
 
-Scale notes: per-entity writes are independent jobs, so a scheduler can
-run DAG-parallel branches concurrently; all incremental pruning (HWM +
-anti-join) happens inside each entity's plan.
+Scale notes: entities are scheduled by readiness, like dbt's
+``threads``: an entity starts as soon as every entity it reads has been
+written and re-registered as a store read (a view: re-registered), so
+independent branches (the hubs, links and satellites of one stage, the
+PITs and bridges of one spine) build and write concurrently. The pool
+is sized from the session — at most ``defaultParallelism`` threads,
+started only as entities become ready — with no knob of its own. Each entity's body is the same serial sequence of plans and jobs
+either way; only their overlap changes, which pays when a load waits
+on per-job latency rather than on executors. All incremental pruning
+(HWM + anti-join) happens inside each entity's plan.
 """
 
 from __future__ import annotations
@@ -137,7 +144,31 @@ def run_pipeline(spark, decls: dict, store: ParquetStore,
     materialized, so consuming one always recomputes it). A chosen
     node whose skipped dependency has never been materialized raises
     up front — dbt would fail the same way at reference time, but a
-    plain error beats a missing-table stack trace mid-run."""
+    plain error beats a missing-table stack trace mid-run.
+
+    Scheduling: chosen entities run on a thread pool as soon as every
+    chosen entity they read (directly or through a skipped view) is
+    finished — written and re-registered as a store read, or, for a
+    view, re-registered. Skipped entities are registered up front. The
+    pool starts a thread when an entity is ready and none is idle, up
+    to ``defaultParallelism``, and each load carries the caller's
+    Spark thread-local properties, so a job group set around the call
+    still tags (and ``cancelJobGroup`` still cancels) every job of the
+    load. The
+    returned dict is in topological order whatever the finishing
+    order. After the first failure no new entity starts; loads already
+    running finish (insert-only, so a rerun stays idempotent and picks
+    up where this one stopped), then the failure earliest in
+    topological order is raised.
+
+    Concurrency contract for builders: they share one SparkSession, so
+    a builder must not change a session-global conf (``spark.conf.set``)
+    while it runs — a concurrent sibling would plan under it. None of
+    ``plans.project.KINDS`` does; the one scoped conf in the engine,
+    ``streaming.staging.scoped_stream_shuffle``
+    (``spark.sql.shuffle.partitions``), is reached only from the
+    streaming gates, which do not run through here. A kind that needs a
+    scoped conf must pass it per plan (hints, options) instead."""
     reg = base_registry
     chosen = select_nodes(decls, select, exclude)
     # Entities a chosen plan will actually READ, walked transitively
@@ -162,19 +193,22 @@ def run_pipeline(spark, decls: dict, store: ParquetStore,
             f"selection needs {missing}, excluded from this run and "
             f"never materialized — widen the selection (e.g. "
             f"'+<node>') or load them first")
-    counts = {}
-    for name in topo_sort(decls):
-        d = decls[name]
-        if name not in chosen:
-            if d.materialize == "view":
-                reg._invalidate(name)
-                reg.spark_loaders[name] = (
-                    lambda spark, d=d: d.build(spark, reg, d.cfg, g))
-            elif store.exists(name):
-                reg._invalidate(name)
-                reg.spark_loaders[name] = (
-                    lambda spark, s=store, n=name: s.read(n))
+    order = topo_sort(decls)
+    for name in order:
+        if name in chosen:
             continue
+        d = decls[name]
+        if d.materialize == "view":
+            reg._invalidate(name)
+            reg.spark_loaders[name] = (
+                lambda spark, d=d: d.build(spark, reg, d.cfg, g))
+        elif store.exists(name):
+            reg._invalidate(name)
+            reg.spark_loaders[name] = (
+                lambda spark, s=store, n=name: s.read(n))
+
+    def load(name):
+        d = decls[name]
         if d.materialize == "view":
             # register the plan; consumers recompute it (dbt view).
             # _invalidate, not just re-register: a re-run would otherwise
@@ -184,8 +218,7 @@ def run_pipeline(spark, decls: dict, store: ParquetStore,
             reg._invalidate(name)
             reg.spark_loaders[name] = (
                 lambda spark, d=d: d.build(spark, reg, d.cfg, g))
-            counts[name] = None
-            continue
+            return None
         target = store.read(name) if store.exists(name) else None
         if d.materialize == "incremental" and target is not None:
             new = d.build(spark, reg, d.cfg, g, target=target)
@@ -204,7 +237,6 @@ def run_pipeline(spark, decls: dict, store: ParquetStore,
             store.append(name, new)
         if count_rows:
             new.unpersist()
-        counts[name] = n
         # downstream entities read the STORED table, not the plan
         # (_invalidate also unpersists any cached copy of the old plan);
         # going through store.read keeps the pipeline storage-agnostic
@@ -212,4 +244,71 @@ def run_pipeline(spark, decls: dict, store: ParquetStore,
         reg._invalidate(name)
         reg.spark_loaders[name] = (
             lambda spark, s=store, n=name: s.read(n))
-    return counts
+        return n
+
+    todo = [n for n in order if n in chosen]
+    return _run_when_ready(spark, todo,
+                           {n: _reads_of(decls, chosen, n) for n in todo},
+                           load)
+
+
+def _reads_of(decls: dict, chosen: set, name: str) -> set:
+    """The chosen entities ``name``'s plan reads: its chosen deps, plus
+    those behind skipped views (a view's plan loads its own deps when
+    consumed). A skipped materialized dep is a stored table — nothing
+    in this run rewrites it, so it is no reason to wait."""
+    out, seen, stack = set(), set(), list(decls[name].deps)
+    while stack:
+        n = stack.pop()
+        if n in seen or n not in decls:
+            continue
+        seen.add(n)
+        if n in chosen:
+            out.add(n)
+        elif decls[n].materialize == "view":
+            stack.extend(decls[n].deps)
+    return out
+
+
+def _run_when_ready(spark, order: list, reads: dict, load) -> dict:
+    """Run ``load(name)`` for every name in ``order`` (a topological
+    order), each as soon as every name in ``reads[name]`` has returned,
+    on at most ``defaultParallelism`` threads. Returns {name: result}
+    in ``order``. After the first failure nothing new starts; loads
+    already running finish, then the failure earliest in ``order`` is
+    raised."""
+    from concurrent.futures import FIRST_COMPLETED, ThreadPoolExecutor, wait
+
+    from pyspark.util import inheritable_thread_target
+
+    workers = max(1, min(len(order), spark.sparkContext.defaultParallelism))
+    pending, running, done, failed = list(order), {}, {}, {}
+    # the executor starts threads on demand: a narrow DAG starts few
+    with ThreadPoolExecutor(workers, thread_name_prefix="dv4dbt-load") as pool:
+        while True:
+            # submit only into idle workers: a submitted load has started,
+            # so after a failure there is no queue left to cancel
+            while not failed and len(running) < workers:
+                ready = next((n for n in pending if reads[n].issubset(done)),
+                             None)
+                if ready is None:
+                    break
+                pending.remove(ready)
+                # wrapped here, per load: the caller's job group, pool and
+                # description (Spark thread-local properties) are copied
+                # now, on this thread, and each load gets its own copy, so
+                # a job group one load sets cannot leak into another's
+                running[pool.submit(inheritable_thread_target(spark)(load),
+                                    ready)] = ready
+            if not running:
+                break
+            finished, _ = wait(running, return_when=FIRST_COMPLETED)
+            for f in finished:
+                name = running.pop(f)
+                try:
+                    done[name] = f.result()
+                except Exception as e:
+                    failed[name] = e
+    if failed:
+        raise failed[min(failed, key=order.index)]
+    return {n: done[n] for n in order}

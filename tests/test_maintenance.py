@@ -379,9 +379,10 @@ def _read_all_md5(store):
     out = {}
     for name in ("hub_customer", "hub_nation", "link_customer_nation",
                  "sat_customer_n0_s", "ma_sat_customer_orders"):
-        out[name] = sorted(
-            tuple(str(r[c]) for c in sorted(store.read(name).columns))
-            for r in store.read(name).collect())
+        df = store.read(name)
+        cols = sorted(df.columns)
+        out[name] = sorted(tuple(str(r[c]) for c in cols)
+                           for r in df.collect())
     return out
 
 

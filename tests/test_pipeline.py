@@ -1,5 +1,9 @@
 """Sources (csv/json readers) and the pipeline runner (dbt-run
-equivalent): full vault load in dependency order, idempotent re-run."""
+equivalent): full vault load in dependency order, idempotent re-run,
+readiness scheduling of independent entities and its failure rules."""
+
+import threading
+from concurrent.futures import ThreadPoolExecutor
 
 import duckdb
 import pytest
@@ -8,7 +12,8 @@ from pyspark.sql import functions as F
 from conftest import SF_DIR
 
 from datavault4dbt_spark import fixtures
-from datavault4dbt_spark.context import DEFAULT, testdata_registry as make_registry
+from datavault4dbt_spark.context import (DEFAULT, Registry,
+                                         testdata_registry as make_registry)
 from datavault4dbt_spark.sources.readers import (SourceConfig, read_source,
                                                  register_sources)
 from datavault4dbt_spark.operators.stage import build_stage
@@ -147,3 +152,146 @@ def test_run_pipeline_selective_subtree(spark, sf_dir, tmp_path):
     counts3 = run_pipeline(spark, _decls(), store, make_registry(sf_dir),
                            select="sat_customer_n0_s")
     assert counts3 == {"sat_customer_n0_s": 0}
+
+
+# ---- readiness scheduling: fake builders over spark.range -------------
+
+def _fake(name, deps=(), materialize="incremental", hook=None):
+    """Three ids, semi-joined to every dependency so the plan really
+    reads them; an incremental rerun anti-joins its target (appends 0)."""
+    def build(spark, reg, cfg, g, target=None):
+        if hook is not None:
+            hook(spark, reg)
+        df = spark.range(3)
+        for dep in deps:
+            df = df.join(reg.load(spark, dep).select("id"), "id", "left_semi")
+        if target is not None:
+            df = df.join(target, "id", "left_anti")
+        return df
+    return EntityDecl(name, build, None, deps=tuple(deps),
+                      materialize=materialize, keys=("id",))
+
+
+def _decls_of(*decls):
+    return {d.name: d for d in decls}
+
+
+def _within(seconds, fn, *args, **kwargs):
+    """Run ``fn`` but fail instead of hanging if it has not returned
+    (no ``with``: its exit would wait for a hung call)."""
+    pool = ThreadPoolExecutor(1)
+    try:
+        return pool.submit(fn, *args, **kwargs).result(timeout=seconds)
+    finally:
+        pool.shutdown(wait=False)
+
+
+def test_independent_siblings_overlap_and_result_is_in_topo_order(
+        spark, tmp_path):
+    """The barrier only opens once all three siblings are inside their
+    builders at the same time — a serial loop would break it."""
+    barrier = threading.Barrier(3, timeout=30)
+    decls = _decls_of(
+        _fake("root", materialize="table"),
+        *(_fake(f"sib{i}", deps=("root",),
+                hook=lambda spark, reg: barrier.wait()) for i in range(3)),
+        _fake("leaf", deps=("sib2", "sib0")))
+    counts = run_pipeline(spark, decls, ParquetStore(spark, str(tmp_path)),
+                          Registry())
+    assert list(counts) == topo_sort(decls)
+    assert set(counts.values()) == {3}
+
+
+def test_dependent_builds_against_the_stored_dependencies(spark, tmp_path):
+    """When a builder runs, every entity it reads — directly or through
+    a view, chosen or skipped — is already re-registered as a read of
+    its stored table."""
+    store = ParquetStore(spark, str(tmp_path))
+    seen = []
+
+    def reads_stored(*deps):
+        def hook(spark, reg):
+            for dep in deps:
+                files = reg.spark_loaders[dep](spark).inputFiles()
+                seen.append(dep)
+                assert files and all(f"{store.path(dep)}/" in f
+                                     for f in files), (dep, files)
+        return hook
+
+    decls = _decls_of(
+        _fake("a", materialize="table"),
+        _fake("v", deps=("a",), materialize="view"),
+        _fake("b", deps=("v",), hook=reads_stored("a")),
+        _fake("c", deps=("a", "b"), hook=reads_stored("a", "b")))
+    run_pipeline(spark, decls, store, Registry())
+    assert seen == ["a", "a", "b"]
+    # the view skipped: b still waits for the rewrite of a behind it
+    seen.clear()
+    counts = run_pipeline(spark, decls, store, Registry(), select=("a", "b"))
+    assert counts == {"a": 3, "b": 0}
+    assert seen == ["a"]
+
+
+def test_failure_stops_new_starts_and_a_rerun_resumes(spark, tmp_path):
+    store = ParquetStore(spark, str(tmp_path))
+    broken = [True]
+    child_calls = []
+
+    def fail(msg):
+        def hook(spark, reg):
+            if broken[0]:
+                raise RuntimeError(msg)
+        return hook
+
+    decls = _decls_of(
+        _fake("root", materialize="table"),
+        _fake("other", deps=("root",)),
+        _fake("bad", deps=("root",), hook=fail("bad failed")),
+        _fake("child", deps=("bad",),
+              hook=lambda spark, reg: child_calls.append(1)))
+    with pytest.raises(RuntimeError, match="bad failed"):
+        _within(300, run_pipeline, spark, decls, store, Registry())
+    assert child_calls == []
+    assert not store.exists("bad") and not store.exists("child")
+    # "other" was started beside "bad" and finished: the rerun skips it
+    broken[0] = False
+    counts = _within(300, run_pipeline, spark, decls, store, Registry())
+    assert counts == {"root": 3, "other": 0, "bad": 3, "child": 3}
+    assert child_calls == [1]
+    counts = run_pipeline(spark, decls, store, Registry())
+    assert counts == {"root": 3, "other": 0, "bad": 0, "child": 0}
+
+
+def test_concurrent_failures_raise_the_earliest_in_topo_order(spark,
+                                                              tmp_path):
+    barrier = threading.Barrier(2, timeout=30)
+
+    def fail(msg):
+        def hook(spark, reg):
+            barrier.wait()
+            raise RuntimeError(msg)
+        return hook
+
+    decls = _decls_of(_fake("first", hook=fail("first failed")),
+                      _fake("second", hook=fail("second failed")))
+    with pytest.raises(RuntimeError, match="first failed"):
+        _within(300, run_pipeline, spark, decls,
+                ParquetStore(spark, str(tmp_path)), Registry())
+
+
+def test_caller_job_group_tags_the_load_jobs(spark, tmp_path):
+    """The loads run on pool threads; they must carry the caller's
+    Spark thread-local properties, or cancelJobGroup could not cancel a
+    running load."""
+    sc = spark.sparkContext
+    group = "test-run-pipeline-job-group"
+    sc.setJobGroup(group, "run_pipeline under a caller job group")
+    try:
+        run_pipeline(spark, _decls_of(_fake("root", materialize="table"),
+                                      _fake("leaf", deps=("root",))),
+                     ParquetStore(spark, str(tmp_path)), Registry())
+    finally:
+        for key in ("spark.jobGroup.id", "spark.job.description",
+                    "spark.job.interruptOnCancel"):
+            sc.setLocalProperty(key, None)
+    assert sc.statusTracker().getJobIdsForGroup(group)
